@@ -19,7 +19,7 @@ O18 (pk alignment pre-flight).
 * The join shuffles both sides on the merge key once; everything
   downstream (classify, per-action split) reuses that partitioning.
 * With a small target (initial loads), AQE converts the join to
-  broadcast automatically; callers can force it with ``broadcast_target``.
+  broadcast automatically.
 * Metrics come from ``df.observe`` — no second pass over the data and
   no driver-side collect of rows.
 """
@@ -97,7 +97,6 @@ def classify_actions(
     target: DataFrame,
     keys: list[str],
     compare_cols: list[str] | None = None,
-    broadcast_target: bool = False,
     action_col: str = "action",
 ) -> DataFrame:
     """Tag every source row insert/update/skip against the target (O6+O12).
@@ -124,9 +123,6 @@ def classify_actions(
         .withColumn("__tgt_hash", content_hash(compare_cols))
         .select(*keys, "__tgt_hash", F.lit(True).alias("__tgt_exists"))
     )
-    if broadcast_target:
-        tgt_slim = F.broadcast(tgt_slim)
-
     joined = src_hash.join(tgt_slim, on=keys, how="left_outer")
     return (
         joined.withColumn(
@@ -147,7 +143,6 @@ def migrate_container(
     compare_cols: list[str] | None = None,
     sanitize: bool = False,
     writer=None,
-    broadcast_target: bool = False,
 ) -> tuple[DataFrame, MigrationResult]:
     """Full migration pipeline for one container; returns the action-tagged
     DataFrame and (after ``writer`` or a count pass) the counter quadruple.
@@ -165,8 +160,7 @@ def migrate_container(
     valid, quarantine = split_valid_invalid(source, id_col=id_col,
                                             pk_cols=keys[1:])
     clean = strip_system_fields(valid)
-    tagged = classify_actions(clean, target, keys, compare_cols,
-                              broadcast_target=broadcast_target)
+    tagged = classify_actions(clean, target, keys, compare_cols)
     if sanitize:
         # The reference sanitizes only documents it WRITES (the gate sits
         # inside the update/insert branches, ``src/migration.py:132-146``);

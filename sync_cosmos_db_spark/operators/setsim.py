@@ -186,9 +186,12 @@ def setsim_join(
     bitset_ok = vc["n_tok"] <= 64
     if bitset_ok:
         vocab = sorted(r["tok"] for r in dfreq.select("tok").collect())
+        # bit 63 is the sign bit of a Java long: 1 << 63 overflows it,
+        # so the 64th token's bit is emitted as its signed value
         bitmap = F.create_map(
             *[x for i, t in enumerate(vocab)
-              for x in (F.lit(t), F.lit(1 << i))])
+              for x in (F.lit(t),
+                        F.lit(1 << i if i < 63 else -(1 << 63)))])
         mask = F.aggregate(
             F.col("tk"), F.lit(0).cast("long"),
             lambda acc, t: acc.bitwiseOR(F.element_at(bitmap, t)))

@@ -555,6 +555,24 @@ EDITED_ROUND.update(dict.fromkeys(
      # (test_edited_queries_registered) correctly cannot tell a doc
      # edit from a logic edit, and a redundant re-row is the safe side
      "sketch_profile_bounds"], 18))
+# Round 19 — the stateful-stream consolidation: each X156/X160 twin
+# takes its batch original's oracle OBJECT (CDC_APPLY_ORACLE /
+# RATE_LIMIT_ORACLE, same SQL text), one replay-stream function and one
+# result tail per operator; streaming/stateful.py keeps one fold per
+# operator behind all three engines.  Rows hash-identical at sf0.01
+# and the foreachBatch forms' per-batch plans unchanged; the two live
+# X156 forms lost a redundant winner window in front of
+# apply_changelog (which collapses the log itself).  The two batch
+# originals only moved their oracle into the shared constant.
+EDITED_ROUND.update(dict.fromkeys(
+    ["cdc_apply_orders", "rate_limit_hourly", "stream_cdc_apply_orders",
+     "stream_rate_limit_hourly", "stream_cdc_apply_orders_batchmerge",
+     "stream_rate_limit_hourly_batchmerge", "stream_rate_limit_hourly_tws",
+     "stream_cdc_apply_orders_tws"], 19))
+# Round-19 no-entry decision: setsim_join's bitset tier now emits the
+# 64th token's bit as the signed long; that changes only a corpus of
+# exactly 64 distinct tokens, which crashed before, and no registered
+# query has one.
 # Round-18 no-entry decisions: operators/linkage + dedup.spread now
 # share the floor_width() helper (ADVICE r17) — the decision and the
 # resulting plans are bit-identical (plans/r18/editdist_* diff = expr

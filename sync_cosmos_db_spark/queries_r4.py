@@ -28,9 +28,8 @@ from sync_cosmos_db_spark.session import load_table
 # X53 — CDC changelog apply (operators/cdc.py)
 # ---------------------------------------------------------------------------
 
-@query(
-    "cdc_apply_orders",
-    """
+#: X53's batch replay — also the oracle of every X156 streaming twin
+CDC_APPLY_ORACLE = """
     WITH snap AS (SELECT o_orderkey AS k, o_totalprice AS p,
                          o_orderstatus AS s FROM orders),
     ch AS (
@@ -54,8 +53,10 @@ from sync_cosmos_db_spark.session import load_table
              AS o_orderstatus
     FROM snap FULL JOIN l ON snap.k = l.k
     WHERE l.op IS NULL OR l.op <> 'D'
-    """,
-)
+    """
+
+
+@query("cdc_apply_orders", CDC_APPLY_ORACLE)
 def cdc_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X53 — change-feed replay (operators/cdc.py): a deterministic
     I/U/D log derived from ``orders`` — two conflicting updates per

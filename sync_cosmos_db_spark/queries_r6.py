@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.queries import fsum, query
+from sync_cosmos_db_spark.queries_r4 import CDC_APPLY_ORACLE
 from sync_cosmos_db_spark.session import load_table
 
 
@@ -533,9 +534,8 @@ def centroid_cosine_labels(spark: SparkSession,
 # X131 — deterministic per-key rate limiting
 # ---------------------------------------------------------------------------
 
-@query(
-    "rate_limit_hourly",
-    """
+#: X131's batch replay — also the oracle of every X160 streaming twin
+RATE_LIMIT_ORACLE = """
     WITH rn AS (
       SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
                AS window_start,
@@ -549,8 +549,10 @@ def centroid_cosine_labels(spark: SparkSession,
            sum(CASE WHEN rn > 5 THEN 1 ELSE 0 END)::BIGINT
              AS n_dropped
     FROM rn GROUP BY 1
-    """,
-)
+    """
+
+
+@query("rate_limit_hourly", RATE_LIMIT_ORACLE)
 def rate_limit_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X131 — deterministic per-key rate limiting: admit the first 5
     events per (user, hour) in (ts, event_id) order, drop the rest —
@@ -1997,35 +1999,8 @@ def funnel_within_1h_events(spark: SparkSession,
 # X156 — streaming CDC compaction + snapshot merge
 # ---------------------------------------------------------------------------
 
-_CDC_ORACLE = """
-    WITH snap AS (SELECT o_orderkey AS k, o_totalprice AS p,
-                         o_orderstatus AS s FROM orders),
-    ch AS (
-      SELECT k, p * 1.1 AS p, s, 1 AS seq, 'U' AS op
-      FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p + 55.5, s, 3, 'U' FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p, s, 2, 'D' FROM snap WHERE k % 11 = 0
-      UNION ALL
-      SELECT -k, p / 2, 'N', 1, 'U' FROM snap WHERE k % 13 = 0),
-    latest AS (
-      SELECT *, row_number() OVER (PARTITION BY k
-                                   ORDER BY seq DESC, op ASC) AS rn
-      FROM ch),
-    l AS (SELECT * FROM latest WHERE rn = 1)
-    SELECT coalesce(l.k, snap.k) AS o_orderkey,
-           floor((CASE WHEN l.k IS NOT NULL THEN l.p ELSE snap.p END)
-                 * 100 + 0.5) / 100 AS o_totalprice,
-           CASE WHEN l.k IS NOT NULL THEN l.s ELSE snap.s END
-             AS o_orderstatus
-    FROM snap FULL JOIN l ON snap.k = l.k
-    WHERE l.op IS NULL OR l.op <> 'D'
-    """
-
-
 def build_cdc_changes(snap: DataFrame) -> DataFrame:
-    """The deterministic I/U/D change log both X156 forms replay (and
+    """The deterministic I/U/D change log every X156 form replays (and
     X53's oracle describes): mod-7 keys get two competing upserts at
     seq 1 and 3, mod-11 keys a tombstone at seq 2, mod-13 keys an
     insert under a fresh negative key.
@@ -2065,53 +2040,64 @@ def build_cdc_changes(snap: DataFrame) -> DataFrame:
             .select("__ev.*"))
 
 
-@query("stream_cdc_apply_orders", _CDC_ORACLE)
+def cdc_replay_stream(spark: SparkSession,
+                      sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The orders snapshot and X53's change log replayed as a REAL
+    multi-batch availableNow file stream (maxFilesPerTrigger=1 over 4
+    files), so conflicting events for one key genuinely arrive in
+    different micro-batches — the input of every X156 form."""
+    import tempfile
+
+    snap = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderstatus")
+    changes = build_cdc_changes(snap)
+    feed = tempfile.mkdtemp(prefix="cdc_stream_")
+    changes.repartition(4).write.mode("overwrite").parquet(feed)
+    stream = (spark.readStream
+              .schema(changes.schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(feed))
+    return snap, stream
+
+
+def cdc_apply_tail(snap: DataFrame, log: DataFrame) -> DataFrame:
+    """Merge a compacted (or emitted) X156 change log into the snapshot
+    — ``apply_changelog`` keeps the (seq DESC, op ASC) winner per key —
+    with prices snapped to cents as X53's oracle does."""
+    from sync_cosmos_db_spark.operators.cdc import apply_changelog
+
+    out = apply_changelog(snap, log, ["o_orderkey"], "seq")
+    return out.select("o_orderkey",
+                      (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+                       / 100).alias("o_totalprice"),
+                      "o_orderstatus")
+
+
+@query("stream_cdc_apply_orders", CDC_APPLY_ORACLE)
 def stream_cdc_apply_orders(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """X156 — STREAMING change-feed compaction
     (``streaming.stateful.changelog_compact_stream``) + snapshot
     merge: the same deterministic I/U/D log as X53 replayed through a
-    REAL multi-batch availableNow file stream (maxFilesPerTrigger=1
-    over 4 files, so conflicting events for one key genuinely arrive
-    in different micro-batches and the winner must survive in the
-    state store), then merged into the snapshot.  The oracle is
-    X53's batch SQL verbatim — the streaming compaction must leave
-    the table bit-identical to the batch replay.  This is the
+    REAL multi-batch stream (``cdc_replay_stream``), so the winner
+    must survive in the state store, then merged into the snapshot.
+    The oracle is X53's batch SQL — the streaming compaction must
+    leave the table bit-identical to the batch replay.  This is the
     continuous-consumer architecture for a Cosmos change feed: the
     stream maintains a keys-sized compacted log; the periodic merge
     never re-reads the feed."""
-    import tempfile
     import uuid
 
-    from pyspark.sql import Window
-
-    from sync_cosmos_db_spark.operators.cdc import apply_changelog
     from sync_cosmos_db_spark.streaming.stateful import (
         changelog_compact_stream,
     )
     from sync_cosmos_db_spark.streaming.windows import run_stream_to_memory
 
-    snap = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus")
-    changes = build_cdc_changes(snap)
-    tmp = tempfile.mkdtemp(prefix="cdc_stream_")
-    changes.repartition(4).write.mode("overwrite").parquet(tmp)
-    stream = (spark.readStream
-              .schema(changes.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(tmp))
-    compact = changelog_compact_stream(stream)
+    snap, stream = cdc_replay_stream(spark, sf_dir)
     emitted = run_stream_to_memory(
-        spark, compact, f"cdc_mem_{uuid.uuid4().hex[:8]}", mode="update")
-    w = Window.partitionBy("o_orderkey").orderBy(
-        F.col("seq").desc(), F.col("op").asc())
-    latest = (emitted.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") == 1).drop("__rn"))
-    out = apply_changelog(snap, latest, ["o_orderkey"], "seq")
-    return out.select("o_orderkey",
-                      (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                       / 100).alias("o_totalprice"),
-                      "o_orderstatus")
+        spark, changelog_compact_stream(stream),
+        f"cdc_mem_{uuid.uuid4().hex[:8]}", mode="update")
+    return cdc_apply_tail(snap, emitted)
 
 
 # ===========================================================================
@@ -2310,43 +2296,15 @@ def pareto_frontier_customers(spark: SparkSession,
 # X160 — streaming per-key rate limiter (X131's live twin)
 # ---------------------------------------------------------------------------
 
-@query(
-    "stream_rate_limit_hourly",
-    """
-    WITH rn AS (
-      SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
-               AS window_start,
-             row_number() OVER (
-               PARTITION BY user_id, time_bucket(INTERVAL '1 hour', ts)
-               ORDER BY ts, event_id) AS rn
-      FROM events)
-    SELECT window_start, count(*)::BIGINT AS n_events,
-           sum(CASE WHEN rn <= 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_admitted,
-           sum(CASE WHEN rn > 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_dropped
-    FROM rn GROUP BY 1
-    """,
-)
-def stream_rate_limit_hourly(spark: SparkSession,
+def rate_limit_replay_stream(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    """X160 — STREAMING per-key rate limiter
-    (``streaming.stateful.rate_limit_stream``): the live form of the
-    X131 batch replay — admission counters per (user, hour) persist
-    in the state store across micro-batches.  The events table is
-    replayed as a REAL 4-batch availableNow stream in event-time
-    order (ntile slices written sequentially with forced mtimes, so
-    a user-hour spanning a batch boundary genuinely tests the
-    carried counter), and the per-batch admission partials are
-    summed per window.  The oracle is X131's batch SQL verbatim —
-    the streaming limiter must admit exactly the rows the batch
-    row_number form admits."""
+    """The events table replayed as a REAL 4-batch availableNow stream
+    in event-time order (ntile slices written with forced mtimes, so
+    a user-hour spanning a batch boundary genuinely tests the carried
+    counter) — the input of every X160 form."""
     import tempfile
-    import uuid
 
-    from sync_cosmos_db_spark.streaming.stateful import rate_limit_stream
     from sync_cosmos_db_spark.streaming.windows import (
-        run_stream_to_memory,
         write_event_time_slices,
     )
 
@@ -2357,17 +2315,34 @@ def stream_rate_limit_hourly(spark: SparkSession,
     # the previous ntile(4) form was an O(N) single-partition global
     # sort + 4 filtered writes (see write_event_time_slices).
     write_event_time_slices(ev, tmp, n_slices=4)
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(tmp))
+    return (spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1).parquet(tmp))
+
+
+@query("stream_rate_limit_hourly", RATE_LIMIT_ORACLE)
+def stream_rate_limit_hourly(spark: SparkSession,
+                             sf_dir: str) -> DataFrame:
+    """X160 — STREAMING per-key rate limiter
+    (``streaming.stateful.rate_limit_stream``): the live form of the
+    X131 batch replay — admission counters per (user, hour) persist
+    in the state store across micro-batches of
+    ``rate_limit_replay_stream``, and the per-batch admission partials
+    are summed per window.  The oracle is X131's batch SQL — the
+    streaming limiter must admit exactly the rows the batch
+    row_number form admits."""
+    import uuid
+
+    from sync_cosmos_db_spark.streaming.stateful import (
+        admission_totals,
+        rate_limit_stream,
+    )
+    from sync_cosmos_db_spark.streaming.windows import run_stream_to_memory
+
+    stream = rate_limit_replay_stream(spark, sf_dir)
     emitted = run_stream_to_memory(
         spark, rate_limit_stream(stream, limit=5),
         f"rl_mem_{uuid.uuid4().hex[:8]}", mode="update")
-    return (emitted.groupBy("window_start")
-            .agg(F.sum("n_batch").cast("long").alias("n_events"),
-                 F.sum("n_admitted_batch").cast("long")
-                 .alias("n_admitted"),
-                 (F.sum("n_batch") - F.sum("n_admitted_batch"))
-                 .cast("long").alias("n_dropped")))
+    return admission_totals(emitted)
 
 
 # ---------------------------------------------------------------------------

@@ -15,49 +15,35 @@ SCALING.md).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.cache_scope import scoped_local_checkpoint
 from sync_cosmos_db_spark.queries import query
-from sync_cosmos_db_spark.queries_r6 import _CDC_ORACLE, build_cdc_changes
-from sync_cosmos_db_spark.session import load_table
+from sync_cosmos_db_spark.queries_r4 import CDC_APPLY_ORACLE
+from sync_cosmos_db_spark.queries_r6 import cdc_apply_tail, cdc_replay_stream
 
 
-@query("stream_cdc_apply_orders_batchmerge", _CDC_ORACLE)
+@query("stream_cdc_apply_orders_batchmerge", CDC_APPLY_ORACLE)
 def stream_cdc_apply_orders_batchmerge(spark: SparkSession,
                                        sf_dir: str) -> DataFrame:
-    """X156 scale form — the same deterministic I/U/D log as
-    ``stream_cdc_apply_orders`` replayed through the same
-    maxFilesPerTrigger=1 availableNow file stream (4 real
-    micro-batches, so conflicting events for one key arrive in
+    """X156 scale form — the same deterministic I/U/D log and the same
+    4-micro-batch stream as ``stream_cdc_apply_orders``
+    (``cdc_replay_stream``: conflicting events for one key arrive in
     different batches and the winner must survive the cross-batch
     merge), compacted via ``streaming.stateful.run_changelog_compaction``
     (foreachBatch + batch ``cdc.collapse_changelog``), then merged into
-    the snapshot.  The oracle is X53's batch SQL verbatim — both X156
-    forms must leave the table bit-identical to the batch replay."""
+    the snapshot.  The oracle is X53's batch SQL — every X156 form
+    must leave the table bit-identical to the batch replay."""
     import tempfile
 
-    from sync_cosmos_db_spark.operators.cdc import apply_changelog
     from sync_cosmos_db_spark.streaming.stateful import (
         run_changelog_compaction,
     )
 
-    snap = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus")
-    changes = build_cdc_changes(snap)
-    tmp = tempfile.mkdtemp(prefix="cdc_stream_bm_")
-    changes.repartition(4).write.mode("overwrite").parquet(tmp + "/feed")
-    stream = (spark.readStream
-              .schema(changes.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(tmp + "/feed"))
+    snap, stream = cdc_replay_stream(spark, sf_dir)
     compacted = run_changelog_compaction(
-        stream, tmp + "/state", ["o_orderkey"], "seq")
-    out = apply_changelog(snap, compacted, ["o_orderkey"], "seq")
-    return out.select("o_orderkey",
-                      (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                       / 100).alias("o_totalprice"),
-                      "o_orderstatus")
+        stream, tempfile.mkdtemp(prefix="cdc_bm_state_"), ["o_orderkey"],
+        "seq")
+    return cdc_apply_tail(snap, compacted)
 
 
 # ===========================================================================

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.migration import classify_actions
+from sync_cosmos_db_spark.streaming.windows import run_foreach_batch
 
 BUCKET_COL = "__kb"
 
@@ -169,8 +170,4 @@ def incremental_migrate(
                           keys, n_buckets=n_buckets,
                           reliable_checkpoint_dir=reliable_checkpoint_dir)
 
-    q = (stream.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    run_foreach_batch(stream, process, checkpoint_dir)

@@ -1,29 +1,70 @@
-"""Custom stateful streaming operator (X7): per-key running aggregates
-via ``applyInPandasWithState``.
+"""Stateful streaming operators: per-key state carried across
+micro-batches.
 
-The reference has no streaming (SURVEY.md §2.2 A7). This is the
-"custom stateful operator" seam the north star mandates — the shape you
-reach for when native windowed aggs can't express the state machine
-(per-entity counters, CDC folding, custom sessionization). State here is
-a (count, sum) pair per key, updated per micro-batch; the same callable
-serves any accumulator that fits in a row.
+The reference has no streaming (SURVEY.md §2.2 A7); it resumes a scan
+with continuation tokens.  These operators are the Spark-native seam
+for state that native windowed aggregates cannot express (per-entity
+counters, CDC folding, custom sessionization).
 
-Scale: state lives in the state store partitioned by key — shuffle is
-on the grouping key only, state size is O(distinct keys), and the
-watermark bounds how long dormant keys are retained when a timeout is
-configured. Arrow batches both directions (Pandas in/out).
+Each operator is ONE per-key fold ``fold(key, state, chunks) ->
+(new_state, emitted_row)``; ``state`` is ``None`` for a new key and
+``chunks`` are the key's pandas frames of the micro-batch.  The engines
+differ only in the runner that feeds the fold:
+
+====  ======================  ======================  ===============
+op    engine                  per-key fold            runner
+====  ======================  ======================  ===============
+X7    applyInPandasWithState  _user_totals_fold       _with_state
+X160  applyInPandasWithState  _rate_limit_fold        _with_state
+X160  transformWithState (*)  _rate_limit_fold        _with_state_tws
+X160  foreachBatch merge      JVM admission formula   _run_versioned
+X156  applyInPandasWithState  _changelog_fold         _with_state
+X156  transformWithState (*)  _changelog_fold         _with_state_tws
+X156  foreachBatch merge      cdc.collapse_changelog  _run_versioned
+====  ======================  ======================  ===============
+
+(*) ``transformWithStateInPandas`` (TWS).  ``_run_versioned`` runs the
+one versioned-state step ``_versioned_merge_batch`` through
+``windows.run_foreach_batch``, the availableNow ``foreachBatch`` loop
+that ``incremental.incremental_migrate`` also uses.
+
+The batch-merge forms keep the fold JVM-side, with zero per-key Python
+dispatch: the rate-limit admission expression
+``least(greatest(limit - n_prev, 0), n_batch)`` is the same formula as
+``take = min(max(limit - n_admitted, 0), len(chunk))`` in the Python
+fold, and the changelog merge is the same (seq DESC, op ASC) winner
+that ``_changelog_fold`` keeps.
+
+Folds are built in factories, so cloudpickle ships them to the Python
+workers BY VALUE and the workers never need this package on their
+import path (the ``operators/multimodal.py`` pattern).
+
+Scale: state lives in the state store partitioned by key, so the
+shuffle is on the grouping key only and state size is O(distinct
+keys).  The batch-merge forms hold state in a keys-sized parquet table
+instead (13–15× the live forms at 2M events / 200k keys; SCALING.md).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+import contextlib
+import os
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from sync_cosmos_db_spark.streaming.windows import DEFAULT_WATERMARK
+from sync_cosmos_db_spark.streaming.windows import (
+    DEFAULT_WATERMARK,
+    run_foreach_batch,
+)
+
+# fold(key, state | None, chunks) -> (new_state, one-row pandas frame)
+Fold = Callable[[tuple, Any, Iterator[pd.DataFrame]],
+                tuple[tuple, pd.DataFrame]]
 
 _OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
 # state sum is INTEGER CENTS: per-group pandas float accumulation uses
@@ -36,83 +77,78 @@ _OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
 # location; the availableNow test runs here always do.
 _STATE_SCHEMA = "n bigint, s bigint"
 
-
-def running_user_totals(events: DataFrame,
-                        watermark: str = DEFAULT_WATERMARK) -> DataFrame:
-    """Streaming per-user running (count, sum) with explicit state.
-    Update mode: each micro-batch emits the keys it touched with their
-    cumulative totals — the final emission per key equals the batch
-    ``groupBy(user).agg(count, sum)``.
-
-    The state callable is a self-contained CLOSURE (imports inside, no
-    module-level references) so cloudpickle ships it by value and the
-    Python workers don't need this package on their import path — same
-    pattern as ``operators/multimodal.py``."""
-
-    def update(key: Any, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        n, s = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += int(_np.floor(pdf["value"].to_numpy() * 100
-                               + 0.5).astype("int64").sum())
-        state.update((n, s))
-        yield _pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                             "sum_value": [s / 100.0]})
-
-    # only the key, the watermark column, and ``value`` cross the
-    # Python boundary (guide §4.1) — the update body touches nothing
-    # else, and events carry a wide ``props`` JSON string.
-    ev = (events.select("user_id", "ts", "value")
-          .withWatermark("ts", watermark))
-    return ev.groupBy("user_id").applyInPandasWithState(
-        update, _OUT_SCHEMA, _STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
-
-
 _CDC_OUT_SCHEMA = ("o_orderkey bigint, o_totalprice double, "
                    "o_orderstatus string, seq bigint, op string")
 _CDC_STATE_SCHEMA = ("seq bigint, op string, price double, "
                      "status string")
 
+_RL_OUT_SCHEMA = ("user_id bigint, window_start bigint, "
+                  "n_batch bigint, n_admitted_batch bigint")
+_RL_STATE_SCHEMA = "n_seen bigint, n_admitted bigint"
 
-def changelog_compact_stream(changes: DataFrame) -> DataFrame:
-    """X156 — streaming changelog compaction: per key, retain the
-    winning event under the X53 collapse order (seq DESC, op ASC —
-    higher sequence wins; at equal sequence a tombstone beats an
-    upsert) across micro-batches — the live form of
-    ``operators/cdc.collapse_changelog``, the compaction a change-feed
-    consumer maintains continuously so the periodic snapshot merge
-    applies a keys-sized compacted log instead of replaying the full
-    feed.
+_ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
+                     "state.RocksDBStateStoreProvider")
 
-    State per key is ONE event row (O(distinct keys) in the state
-    store, shuffled on the key the feed is already partitioned by).
-    Update mode re-emits a key's current winner whenever a batch
-    touches it; emissions are monotone under the collapse order, so
-    the LAST emission per key is the final winner — the batch
-    consumer takes one more tiny collapse over the emitted table.
-    ``changes`` must carry ``(o_orderkey, o_totalprice,
-    o_orderstatus, seq, op)``."""
 
-    def update(key: Any, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
+# ---------------------------------------------------------------------------
+# Per-key folds (self-contained closures: imports inside, no module refs)
+# ---------------------------------------------------------------------------
+
+def _user_totals_fold() -> Fold:
+    def fold(key, state, chunks):
+        import numpy as _np
         import pandas as _pd
 
-        if state.exists:
-            seq, op, price, status = state.get
-        else:
-            seq, op, price, status = None, None, None, None
-        for pdf in pdfs:
+        n, s = state if state is not None else (0, 0)
+        for pdf in chunks:
+            n += len(pdf)
+            s += int(_np.floor(pdf["value"].to_numpy() * 100
+                               + 0.5).astype("int64").sum())
+        return (n, s), _pd.DataFrame({"user_id": [key[0]], "n_events": [n],
+                                      "sum_value": [s / 100.0]})
+
+    return fold
+
+
+def _rate_limit_fold(limit: int) -> Fold:
+    def fold(key, state, chunks):
+        import numpy as _np
+        import pandas as _pd
+
+        n_seen, n_adm = state if state is not None else (0, 0)
+        n_batch = adm_batch = 0
+        for pdf in chunks:
+            # admission COUNTS depend only on sizes, not row order
+            c = len(pdf)
+            take = min(max(limit - n_adm, 0), c)
+            n_seen += c
+            n_batch += c
+            n_adm += take
+            adm_batch += take
+        # all-int64 output: one 2-D ndarray constructor (measured
+        # 53 us vs 109 us for the dict-of-lists form;
+        # this runs once per key per batch, ~95k times at sf0.1)
+        return (n_seen, n_adm), _pd.DataFrame(
+            _np.array([[key[0], key[1], n_batch, adm_batch]],
+                      dtype="int64"),
+            columns=["user_id", "window_start",
+                     "n_batch", "n_admitted_batch"])
+
+    return fold
+
+
+def _changelog_fold() -> Fold:
+    def fold(key, state, chunks):
+        import pandas as _pd
+
+        seq, op, price, status = (state if state is not None
+                                  else (None, None, None, None))
+        for pdf in chunks:
             # row-by-row fold under (seq DESC, op ASC) — a total-order
             # fold, so folding rows one at a time equals taking the
             # chunk winner first; groups are a handful of rows, and
             # the per-group pandas sort_values this replaces measured
-            # 555 us vs ~25 us for tolist()+fold (guide §4.2: the
-            # per-key body is the multiplier at ~45k keys/batch).
+            # 555 us vs ~25 us for tolist()+fold.
             for r_seq, r_op, r_price, r_status in zip(
                     pdf["seq"].tolist(), pdf["op"].tolist(),
                     pdf["o_totalprice"].tolist(),
@@ -122,252 +158,30 @@ def changelog_compact_stream(changes: DataFrame) -> DataFrame:
                     seq, op = int(r_seq), str(r_op)
                     price = float(r_price)
                     status = str(r_status)
-        state.update((seq, op, price, status))
-        yield _pd.DataFrame({
+        return (seq, op, price, status), _pd.DataFrame({
             "o_orderkey": [key[0]], "o_totalprice": [price],
             "o_orderstatus": [status], "seq": [seq], "op": [op]})
 
-    return changes.groupBy("o_orderkey").applyInPandasWithState(
-        update, _CDC_OUT_SCHEMA, _CDC_STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
+    return fold
 
 
-def make_compaction_merge_batch(state_dir: str, keys: list[str],
-                                seq_col: str, op_col: str,
-                                versions: dict[int, str]):
-    """The ``foreachBatch`` body of ``run_changelog_compaction``,
-    exposed as a factory so the retry-idempotence contract is directly
-    testable: calling the returned function TWICE with the same
-    ``batch_id`` (a Structured-Streaming micro-batch retry) must leave
-    the version list and the final compacted state identical to a
-    single call.  ``versions`` is keyed by batch_id (not "latest"): on
-    a retry the previous state must be the last version BEFORE this
-    batch — a bare latest-pointer would hand the retry its own partial
-    output, lazily reading the very path the overwrite is about to
-    clobber."""
-    import os
+# ---------------------------------------------------------------------------
+# Engine runners
+# ---------------------------------------------------------------------------
 
-    from sync_cosmos_db_spark.operators.cdc import collapse_changelog
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        compact = collapse_changelog(batch_df, keys, seq_col, op_col)
-        prior = [versions[b] for b in sorted(versions) if b < batch_id]
-        if prior:
-            prev = spark.read.parquet(prior[-1])
-            compact = collapse_changelog(
-                prev.unionByName(compact), keys, seq_col, op_col)
-        out = os.path.join(state_dir, f"v{batch_id:020d}")
-        compact.write.mode("overwrite").parquet(out)
-        versions[batch_id] = out
-
-    return merge_batch
-
-
-def run_changelog_compaction(changes: DataFrame, state_dir: str,
-                             keys: list[str], seq_col: str,
-                             op_col: str = "op") -> DataFrame:
-    """X156 SCALE form (round-6 verdict item 3) — changelog compaction
-    via ``foreachBatch`` + the batch ``cdc.collapse_changelog``: each
-    micro-batch is collapsed with whole-batch JVM window work, merged
-    against the previous keys-sized compacted log, and written as a new
-    parquet version the next batch reads (the round-trip also truncates
-    lineage, the X90/X112 lesson).  Semantically identical to
-    ``changelog_compact_stream`` — the winner per key under
-    (seq DESC, op ASC) survives across batches — but with ZERO per-key
-    Python dispatch: the ``applyInPandasWithState`` form measured ~20k
-    keys/s/batch because every group crosses the Python boundary
-    individually, while this form's per-batch cost is one batch-keyed
-    window + one keys-sized merge collapse, all JVM-side
-    (measured 9× faster at 2M events / 200k keys; SCALING.md).
-
-    At pipeline cardinality (10⁸–10⁹ keys) this is the architecture a
-    change-feed consumer runs: state is a keys-sized TABLE, not a state
-    store — on a real cluster the version write targets a bucketed
-    table or a Delta/Iceberg MERGE so the per-batch merge co-locates on
-    the key without reshuffling history.  Returns the final compacted
-    log (one row per surviving key).
-    """
-    import os
-
-    versions: dict[int, str] = {}
-    merge_batch = make_compaction_merge_batch(
-        state_dir, keys, seq_col, op_col, versions)
-
-    q = (changes.writeStream.foreachBatch(merge_batch)
-         .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    spark = changes.sparkSession
-    assert versions, "stream produced no batches"
-    return spark.read.parquet(versions[max(versions)])
-
-
-def make_rate_limit_merge_batch(state_dir: str, limit: int,
-                                versions: dict[int, str]):
-    """The ``foreachBatch`` body of ``run_rate_limit_batchmerge``,
-    exposed as a factory so the retry-idempotence contract is directly
-    testable (see ``make_compaction_merge_batch``).  ``versions`` is
-    keyed by batch_id so a micro-batch RETRY is idempotent: the
-    overwrite write already was, but a list-append would double-count
-    that version's partials in the final read-all-versions sum, and
-    ``versions[-1]`` would hand the retry its OWN partial output as
-    "prev" (advisor r8 finding)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        keyed = (batch_df
-                 .groupBy("user_id",
-                          F.unix_timestamp(
-                              F.date_trunc("hour", F.col("ts")))
-                          .alias("window_start"))
-                 .agg(F.count(F.lit(1)).alias("n_batch")))
-        prior = [versions[b] for b in sorted(versions) if b < batch_id]
-        if prior:
-            prev = (spark.read.parquet(prior[-1])
-                    .select("user_id", "window_start",
-                            F.col("n_admitted_total").alias("n_prev")))
-            merged = keyed.join(prev, ["user_id", "window_start"],
-                                "full_outer")
-        else:
-            merged = keyed.withColumn("n_prev", F.lit(None).cast("long"))
-        merged = (merged
-                  .withColumn("n_batch",
-                              F.coalesce("n_batch", F.lit(0)))
-                  .withColumn("n_prev", F.coalesce("n_prev", F.lit(0)))
-                  .withColumn(
-                      "n_admitted_batch",
-                      F.least(F.greatest(F.lit(limit) - F.col("n_prev"),
-                                         F.lit(0)),
-                              F.col("n_batch")))
-                  .withColumn("n_admitted_total",
-                              F.col("n_prev") + F.col("n_admitted_batch"))
-                  .select("user_id", "window_start", "n_batch",
-                          "n_admitted_batch", "n_admitted_total"))
-        out = os.path.join(state_dir, f"v{batch_id:020d}")
-        merged.write.mode("overwrite").parquet(out)
-        versions[batch_id] = out
-
-    return merge_batch
-
-
-def run_rate_limit_batchmerge(events_stream: DataFrame, state_dir: str,
-                              limit: int = 5) -> DataFrame:
-    """X160 SCALE form (round-7 verdict item 2) — per-key rate limiting
-    via ``foreachBatch`` + a keys-sized counter table, the mirror of
-    ``run_changelog_compaction``: each micro-batch is reduced to ONE
-    row per (user, hour) key JVM-side (``groupBy().count()`` with
-    map-side partial aggregation), full-outer-joined against the
-    previous keys-sized admitted-counter table, and the merged
-    counters are written as a new parquet version the next batch
-    reads.  Admission COUNTS depend only on sizes — the first
-    ``max(limit - admitted_so_far, 0)`` events of a key's batch are
-    admitted — so the whole batch step is one aggregate + one
-    keys-sized join, ZERO per-key Python dispatch.  Semantically
-    identical to ``rate_limit_stream`` (the ``applyInPandasWithState``
-    live form, measured ~20k keys/s/batch because every pandas group
-    crosses the Python boundary individually); same oracle, the X131
-    batch row_number SQL.
-
-    At pipeline cardinality the counter table is a bucketed table or
-    Delta/Iceberg MERGE target co-located on the key; dormant windows
-    age out of it with a watermark filter instead of a state-store
-    timeout.  Returns the per-window admission totals
-    ``(window_start, n_events, n_admitted, n_dropped)``."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    versions: dict[int, str] = {}
-    merge_batch = make_rate_limit_merge_batch(state_dir, limit, versions)
-
-    q = (events_stream.writeStream.foreachBatch(merge_batch)
-         .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    spark = events_stream.sparkSession
-    assert versions, "stream produced no batches"
-    # Each version row carries THAT batch's (n_batch, n_admitted_batch)
-    # partials (0 for keys the batch didn't touch), so summing the
-    # partials across versions reproduces the per-window totals.
-    emissions = spark.read.parquet(
-        *(versions[b] for b in sorted(versions)))
-    return (emissions.groupBy("window_start")
-            .agg(F.sum("n_batch").cast("long").alias("n_events"),
-                 F.sum("n_admitted_batch").cast("long")
-                 .alias("n_admitted"),
-                 (F.sum("n_batch") - F.sum("n_admitted_batch"))
-                 .cast("long").alias("n_dropped"))
-            .filter(F.col("n_events") > 0))
-
-
-_RL_OUT_SCHEMA = ("user_id bigint, window_start bigint, "
-                  "n_batch bigint, n_admitted_batch bigint")
-_RL_STATE_SCHEMA = "n_seen bigint, n_admitted bigint"
-
-
-def rate_limit_stream(events: DataFrame, limit: int = 5) -> DataFrame:
-    """X160 — streaming per-key rate limiter: admit the first
-    ``limit`` events per (user, hour) in event order, maintained LIVE
-    across micro-batches in the state store — the streaming twin of
-    the batch replay (X131), i.e. an actual API throttle rather than
-    its offline audit.
-
-    Grouping key is (user, hour-bucket), so state is two counters per
-    active key and the shuffle is the keying the feed already has.
-    Within each batch the pandas group is sorted by (ts, event_id);
-    across batches the admission counter persists, so feeding batches
-    in event-time order reproduces the batch semantics exactly —
-    which is what the registered query's oracle (X131's SQL verbatim)
-    asserts.  Emits per-batch partials
-    ``(user, window_start, n_batch, n_admitted_batch)``; the consumer
-    sums them per window."""
+def _with_state(grouped: GroupedData, fold: Fold, out_schema: str,
+                state_schema: str) -> DataFrame:
+    """``applyInPandasWithState`` runner: the fold over the legacy flat
+    state row, update mode (each batch re-emits the keys it touched)."""
 
     def update(key: Any, pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+        new, row = fold(key, state.get if state.exists else None, pdfs)
+        state.update(new)
+        yield row
 
-        n_seen, n_adm = state.get if state.exists else (0, 0)
-        n_batch = 0
-        adm_batch = 0
-        for pdf in pdfs:
-            # admission COUNTS depend only on sizes, not row order —
-            # fully vectorized per chunk
-            c = len(pdf)
-            take = min(max(limit - n_adm, 0), c)
-            n_seen += c
-            n_batch += c
-            n_adm += take
-            adm_batch += take
-        state.update((n_seen, n_adm))
-        # all-int64 output: one 2-D ndarray constructor (measured
-        # 53 us vs 109 us for the dict-of-lists form — guide §4.2;
-        # this runs once per key per batch, ~95k times at sf0.1)
-        yield _pd.DataFrame(
-            _np.array([[key[0], key[1], n_batch, adm_batch]],
-                      dtype="int64"),
-            columns=["user_id", "window_start",
-                     "n_batch", "n_admitted_batch"])
-
-    from pyspark.sql import functions as F
-
-    # project to the grouping keys ONLY before the stateful operator:
-    # the update body reads nothing but group sizes, yet every column
-    # (including the wide ``props`` JSON string) would otherwise cross
-    # JVM -> Arrow -> Python per group (guide §4.1 — Spark cannot see
-    # which columns an opaque function touches).
-    keyed = events.select(
-        "user_id",
-        F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
-        .alias("__win"))
-    return keyed.groupBy("user_id", "__win").applyInPandasWithState(
-        update, _RL_OUT_SCHEMA, _RL_STATE_SCHEMA, "update",
+    return grouped.applyInPandasWithState(
+        update, out_schema, state_schema, "update",
         GroupStateTimeout.NoTimeout)
 
 
@@ -385,17 +199,11 @@ def transform_with_state_available() -> bool:
     ``google.protobuf`` (with a documented no-op shim for the 5.27+
     ``runtime_version`` gencode guard — see the module docstring for
     why the skew is verified-compatible).  Worker processes get the
-    alias through the processors' ``__reduce__`` hook
+    alias through the processor's ``__reduce__`` hook
     (``protobuf_shim.rebuild_tws_processor``), which runs at command
     unpickle time, before the API client's first lazy proto import.
-    The TWS parity tests now RUN (not skip).  TWS additionally needs
-    the RocksDB state store provider (column families) — the runners
-    below set ``spark.sql.streaming.stateStore.providerClass`` per
-    query.
-
-    Still per-key Python dispatch: the foreachBatch batch-merge twins
-    remain the blessed scale path (13–15× the live forms at 2M events
-    / 200k keys; SCALING.md)."""
+    TWS additionally needs the RocksDB state store provider (column
+    families): run the query inside ``rocksdb_state_store``."""
     from sync_cosmos_db_spark.protobuf_shim import install_protobuf_alias
 
     if not install_protobuf_alias():
@@ -409,10 +217,6 @@ def transform_with_state_available() -> bool:
     return True
 
 
-_ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
-                     "state.RocksDBStateStoreProvider")
-
-
 def _register_shim_by_value() -> None:
     """Ship ``protobuf_shim`` by value inside every pickle that
     references it, so workers never need this repo on their import
@@ -424,17 +228,13 @@ def _register_shim_by_value() -> None:
     cloudpickle.register_pickle_by_value(protobuf_shim)
 
 
-def rate_limit_stream_tws(events: DataFrame, limit: int = 5) -> DataFrame:
-    """X160 on Spark 4's ``transformWithStateInPandas`` — the same
-    per-(user, hour) admission counters as ``rate_limit_stream``, held
-    in a typed ``ValueState`` instead of the legacy flat state row.
-    Output schema and semantics are identical, so the parity test can
-    assert TWS == live == batchmerge totals.  Gated behind
-    ``transform_with_state_available()`` (see probe docstring); the
-    query must run under the RocksDB state store provider
-    (``_ROCKSDB_PROVIDER`` — TWS needs column families).  Still
-    per-key Python dispatch, so ``run_rate_limit_batchmerge`` remains
-    the scale path regardless of engine."""
+def _with_state_tws(grouped: GroupedData, fold: Fold, out_schema: str,
+                    state_schema: str) -> DataFrame:
+    """``transformWithStateInPandas`` runner: the fold over one typed
+    ``ValueState``.  Gated behind ``transform_with_state_available``.
+    The state name is part of a TWS checkpoint: a checkpoint written
+    under the older per-operator names (``counters`` / ``winner``) does
+    not resume — start such queries from a fresh checkpoint location."""
     if not transform_with_state_available():
         raise RuntimeError(
             "transformWithStateInPandas unavailable: no usable protobuf "
@@ -442,7 +242,6 @@ def rate_limit_stream_tws(events: DataFrame, limit: int = 5) -> DataFrame:
             "docstring / SCALING.md)")
     _register_shim_by_value()
 
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -450,38 +249,16 @@ def rate_limit_stream_tws(events: DataFrame, limit: int = 5) -> DataFrame:
 
     from sync_cosmos_db_spark.protobuf_shim import rebuild_tws_processor
 
-    class RateLimitProcessor(StatefulProcessor):
+    class FoldProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "counters", "n_seen bigint, n_admitted bigint")
+            self._state = handle.getValueState("state", state_schema)
 
         def handleInputRows(self, key, rows, timerValues):
-            import numpy as _np
-            import pandas as _pd
-
-            # ValueState.get() returns None when the state is absent
-            # (value_state_client.get), so the separate exists() probe
-            # was a second state-server round trip per key per batch —
-            # ~95k redundant socket+protobuf exchanges at sf0.1.
-            got = self._state.get()
-            n_seen, n_adm = got if got is not None else (0, 0)
-            n_batch = 0
-            adm_batch = 0
-            for pdf in rows:
-                c = len(pdf)
-                take = min(max(limit - n_adm, 0), c)
-                n_seen += c
-                n_batch += c
-                n_adm += take
-                adm_batch += take
-            self._state.update((n_seen, n_adm))
-            # all-int64 output: one 2-D ndarray constructor (53 us vs
-            # 109 us dict-of-lists; once per key per batch)
-            yield _pd.DataFrame(
-                _np.array([[key[0], key[1], n_batch, adm_batch]],
-                          dtype="int64"),
-                columns=["user_id", "window_start",
-                         "n_batch", "n_admitted_batch"])
+            # get() returns None when the state is absent, so no
+            # exists() round trip to the state server per key per batch
+            new, row = fold(key, self._state.get(), rows)
+            self._state.update(new)
+            yield row
 
         def close(self) -> None:
             pass
@@ -493,78 +270,276 @@ def rate_limit_stream_tws(events: DataFrame, limit: int = 5) -> DataFrame:
             return (rebuild_tws_processor,
                     (type(self), dict(self.__dict__)))
 
-    # grouping keys only (guide §4.1): the processor reads group sizes,
-    # so shipping the full event row (incl. the ``props`` JSON string)
-    # through Arrow per group is pure overhead.
-    keyed = events.select(
-        "user_id",
-        F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
-        .alias("__win"))
-    return keyed.groupBy("user_id", "__win").transformWithStateInPandas(
-        RateLimitProcessor(), _RL_OUT_SCHEMA, "Update", "None")
+    return grouped.transformWithStateInPandas(
+        FoldProcessor(), out_schema, "Update", "None")
+
+
+@contextlib.contextmanager
+def rocksdb_state_store(spark: SparkSession):
+    """Run the streaming queries started inside this scope under the
+    RocksDB state store provider (TWS needs its column families), then
+    restore the session's previous provider."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, _ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _versioned_merge_batch(state_dir: str, versions: dict[int, str],
+                           step: Callable[[DataFrame, DataFrame | None],
+                                          DataFrame]):
+    """The ``foreachBatch`` body of both batch-merge runners: merge the
+    batch against the last state version BEFORE it with
+    ``step(batch_df, prev_or_None)`` and write the result as version
+    ``batch_id``.  ``versions`` is keyed by batch_id, so a micro-batch
+    RETRY is idempotent: the retry overwrites its own version and reads
+    the same previous one — a list-append would stack the retry's
+    output, and a bare latest-pointer would hand the retry its own
+    partial output, lazily reading the very path the overwrite is about
+    to clobber."""
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        prior = [versions[b] for b in sorted(versions) if b < batch_id]
+        prev = (batch_df.sparkSession.read.parquet(prior[-1])
+                if prior else None)
+        out = os.path.join(state_dir, f"v{batch_id:020d}")
+        step(batch_df, prev).write.mode("overwrite").parquet(out)
+        versions[batch_id] = out
+
+    return merge_batch
+
+
+def _run_versioned(stream: DataFrame, state_dir: str,
+                   make_merge_batch) -> list[str]:
+    """Drive ``make_merge_batch(versions)`` over every available
+    micro-batch; returns the version paths in batch order."""
+    versions: dict[int, str] = {}
+    run_foreach_batch(stream, make_merge_batch(versions),
+                      os.path.join(state_dir, "_ckpt"))
+    if not versions:
+        raise RuntimeError("stream produced no batches")
+    return [versions[b] for b in sorted(versions)]
+
+
+# ---------------------------------------------------------------------------
+# X7 — per-user running totals
+# ---------------------------------------------------------------------------
+
+def running_user_totals(events: DataFrame,
+                        watermark: str = DEFAULT_WATERMARK) -> DataFrame:
+    """Streaming per-user running (count, sum) with explicit state.
+    Update mode: each micro-batch emits the keys it touched with their
+    cumulative totals — the final emission per key equals the batch
+    ``groupBy(user).agg(count, sum)``."""
+    # only the key, the watermark column, and ``value`` cross the
+    # Python boundary — events carry a wide ``props`` JSON
+    # string the fold never reads.
+    ev = (events.select("user_id", "ts", "value")
+          .withWatermark("ts", watermark))
+    return _with_state(ev.groupBy("user_id"), _user_totals_fold(),
+                       _OUT_SCHEMA, _STATE_SCHEMA)
+
+
+# ---------------------------------------------------------------------------
+# X156 — changelog compaction
+# ---------------------------------------------------------------------------
+
+def changelog_compact_stream(changes: DataFrame) -> DataFrame:
+    """X156 — streaming changelog compaction: per key, retain the
+    winning event under the X53 collapse order (seq DESC, op ASC —
+    higher sequence wins; at equal sequence a tombstone beats an
+    upsert) across micro-batches — the live form of
+    ``operators/cdc.collapse_changelog``, the compaction a change-feed
+    consumer maintains continuously so the periodic snapshot merge
+    applies a keys-sized compacted log instead of replaying the full
+    feed.
+
+    State per key is ONE event row.  Update mode re-emits a key's
+    current winner whenever a batch touches it; emissions are monotone
+    under the collapse order, so the LAST emission per key is the final
+    winner — the batch consumer takes one more tiny collapse over the
+    emitted table.  ``changes`` must carry ``(o_orderkey, o_totalprice,
+    o_orderstatus, seq, op)``."""
+    return _with_state(changes.groupBy("o_orderkey"), _changelog_fold(),
+                       _CDC_OUT_SCHEMA, _CDC_STATE_SCHEMA)
 
 
 def changelog_compact_stream_tws(changes: DataFrame) -> DataFrame:
-    """X156 on Spark 4's ``transformWithStateInPandas`` — the same
-    per-key changelog winner as ``changelog_compact_stream`` ((seq
-    DESC, op ASC) collapse order), held in a typed ``ValueState``.
-    Identical output schema/semantics, so the parity test asserts
-    TWS == live emissions fold to the same final winners.  Same
-    gating and RocksDB requirement as ``rate_limit_stream_tws``;
-    ``run_changelog_compaction`` remains the scale path."""
-    if not transform_with_state_available():
-        raise RuntimeError(
-            "transformWithStateInPandas unavailable: no usable protobuf "
-            "runtime found (see transform_with_state_available "
-            "docstring / SCALING.md)")
-    _register_shim_by_value()
+    """X156 on Spark 4's ``transformWithStateInPandas``: the same fold
+    and output as ``changelog_compact_stream``, with the winner held in
+    a typed ``ValueState``.  Run it inside ``rocksdb_state_store``."""
+    return _with_state_tws(changes.groupBy("o_orderkey"),
+                           _changelog_fold(), _CDC_OUT_SCHEMA,
+                           _CDC_STATE_SCHEMA)
 
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    from sync_cosmos_db_spark.protobuf_shim import rebuild_tws_processor
+def make_compaction_merge_batch(state_dir: str, keys: list[str],
+                                seq_col: str, op_col: str,
+                                versions: dict[int, str]):
+    """The ``foreachBatch`` body of ``run_changelog_compaction``,
+    exposed as a factory so the retry-idempotence contract is directly
+    testable: calling the returned function TWICE with the same
+    ``batch_id`` must leave ``versions`` and the final compacted state
+    identical to a single call (see ``_versioned_merge_batch``)."""
+    from sync_cosmos_db_spark.operators.cdc import collapse_changelog
 
-    class CompactProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "winner", _CDC_STATE_SCHEMA)
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        compact = collapse_changelog(batch_df, keys, seq_col, op_col)
+        if prev is None:
+            return compact
+        return collapse_changelog(prev.unionByName(compact), keys,
+                                  seq_col, op_col)
 
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as _pd
+    return _versioned_merge_batch(state_dir, versions, step)
 
-            # get() alone suffices — it returns None when absent, so
-            # the exists() probe was a redundant state-server round
-            # trip per key per batch (see RateLimitProcessor).
-            got = self._state.get()
-            if got is not None:
-                seq, op, price, status = got
-            else:
-                seq, op, price, status = None, None, None, None
-            for pdf in rows:
-                # row-by-row fold under (seq DESC, op ASC); replaces a
-                # 555 us per-group pandas sort_values (guide §4.2)
-                for r_seq, r_op, r_price, r_status in zip(
-                        pdf["seq"].tolist(), pdf["op"].tolist(),
-                        pdf["o_totalprice"].tolist(),
-                        pdf["o_orderstatus"].tolist()):
-                    if (seq is None or r_seq > seq
-                            or (r_seq == seq and r_op < op)):
-                        seq, op = int(r_seq), str(r_op)
-                        price = float(r_price)
-                        status = str(r_status)
-            self._state.update((seq, op, price, status))
-            yield _pd.DataFrame({
-                "o_orderkey": [key[0]], "o_totalprice": [price],
-                "o_orderstatus": [status], "seq": [seq], "op": [op]})
 
-        def close(self) -> None:
-            pass
+def run_changelog_compaction(changes: DataFrame, state_dir: str,
+                             keys: list[str], seq_col: str,
+                             op_col: str = "op") -> DataFrame:
+    """X156 SCALE form (round-6 verdict item 3) — changelog compaction
+    via ``foreachBatch`` + the batch ``cdc.collapse_changelog``: each
+    micro-batch is collapsed with whole-batch JVM window work, merged
+    against the previous keys-sized compacted log, and written as a new
+    parquet version the next batch reads (the round-trip also truncates
+    lineage, the X90/X112 lesson).  Semantically identical to
+    ``changelog_compact_stream``, with ZERO per-key Python dispatch
+    (measured 9× faster at 2M events / 200k keys; SCALING.md).
 
-        def __reduce__(self):
-            return (rebuild_tws_processor,
-                    (type(self), dict(self.__dict__)))
+    At pipeline cardinality (10⁸–10⁹ keys) this is the architecture a
+    change-feed consumer runs: state is a keys-sized TABLE, not a state
+    store — on a real cluster the version write targets a bucketed
+    table or a Delta/Iceberg MERGE so the per-batch merge co-locates on
+    the key without reshuffling history.  Returns the final compacted
+    log (one row per surviving key).
+    """
+    paths = _run_versioned(
+        changes, state_dir,
+        lambda versions: make_compaction_merge_batch(
+            state_dir, keys, seq_col, op_col, versions))
+    return changes.sparkSession.read.parquet(paths[-1])
 
-    return changes.groupBy("o_orderkey").transformWithStateInPandas(
-        CompactProcessor(), _CDC_OUT_SCHEMA, "Update", "None")
+
+# ---------------------------------------------------------------------------
+# X160 — per-key rate limiting
+# ---------------------------------------------------------------------------
+
+def _hour_start():
+    return F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
+
+
+def _rate_limit_keys(events: DataFrame) -> GroupedData:
+    # project to the grouping keys ONLY before the stateful operator:
+    # the fold reads nothing but group sizes, yet every column
+    # (including the wide ``props`` JSON string) would otherwise cross
+    # JVM -> Arrow -> Python per group.
+    return (events.select("user_id", _hour_start().alias("__win"))
+            .groupBy("user_id", "__win"))
+
+
+def admission_totals(emissions: DataFrame) -> DataFrame:
+    """Per-window ``(window_start, n_events, n_admitted, n_dropped)``
+    from per-key ``(n_batch, n_admitted_batch)`` partials — the result
+    of every X160 form."""
+    return (emissions.groupBy("window_start")
+            .agg(F.sum("n_batch").cast("long").alias("n_events"),
+                 F.sum("n_admitted_batch").cast("long")
+                 .alias("n_admitted"),
+                 (F.sum("n_batch") - F.sum("n_admitted_batch"))
+                 .cast("long").alias("n_dropped")))
+
+
+def rate_limit_stream(events: DataFrame, limit: int = 5) -> DataFrame:
+    """X160 — streaming per-key rate limiter: admit the first
+    ``limit`` events per (user, hour) in event order, maintained LIVE
+    across micro-batches in the state store — the streaming twin of
+    the batch replay (X131), i.e. an actual API throttle rather than
+    its offline audit.
+
+    State is two counters per (user, hour) key; across batches the
+    admission counter persists, so feeding batches in event-time order
+    reproduces the batch semantics exactly.  Emits per-batch partials
+    ``(user, window_start, n_batch, n_admitted_batch)``; the consumer
+    sums them per window (``admission_totals``)."""
+    return _with_state(_rate_limit_keys(events), _rate_limit_fold(limit),
+                       _RL_OUT_SCHEMA, _RL_STATE_SCHEMA)
+
+
+def rate_limit_stream_tws(events: DataFrame, limit: int = 5) -> DataFrame:
+    """X160 on Spark 4's ``transformWithStateInPandas``: the same fold
+    and output as ``rate_limit_stream``, with the counters held in a
+    typed ``ValueState``.  Run it inside ``rocksdb_state_store``."""
+    return _with_state_tws(_rate_limit_keys(events),
+                           _rate_limit_fold(limit), _RL_OUT_SCHEMA,
+                           _RL_STATE_SCHEMA)
+
+
+def make_rate_limit_merge_batch(state_dir: str, limit: int,
+                                versions: dict[int, str]):
+    """The ``foreachBatch`` body of ``run_rate_limit_batchmerge``,
+    exposed as a factory so the retry-idempotence contract is directly
+    testable: a retry must overwrite its version's partials, not stack
+    them in the final read-all-versions sum (see
+    ``_versioned_merge_batch``)."""
+
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        keyed = (batch_df
+                 .groupBy("user_id", _hour_start().alias("window_start"))
+                 .agg(F.count(F.lit(1)).alias("n_batch")))
+        if prev is not None:
+            prev = prev.select("user_id", "window_start",
+                               F.col("n_admitted_total").alias("n_prev"))
+            merged = keyed.join(prev, ["user_id", "window_start"],
+                                "full_outer")
+        else:
+            merged = keyed.withColumn("n_prev", F.lit(None).cast("long"))
+        # the Python fold's take = min(max(limit - n_admitted, 0), c)
+        return (merged
+                .withColumn("n_batch", F.coalesce("n_batch", F.lit(0)))
+                .withColumn("n_prev", F.coalesce("n_prev", F.lit(0)))
+                .withColumn(
+                    "n_admitted_batch",
+                    F.least(F.greatest(F.lit(limit) - F.col("n_prev"),
+                                       F.lit(0)),
+                            F.col("n_batch")))
+                .withColumn("n_admitted_total",
+                            F.col("n_prev") + F.col("n_admitted_batch"))
+                .select("user_id", "window_start", "n_batch",
+                        "n_admitted_batch", "n_admitted_total"))
+
+    return _versioned_merge_batch(state_dir, versions, step)
+
+
+def run_rate_limit_batchmerge(events_stream: DataFrame, state_dir: str,
+                              limit: int = 5) -> DataFrame:
+    """X160 SCALE form (round-7 verdict item 2) — per-key rate limiting
+    via ``foreachBatch`` + a keys-sized counter table, the mirror of
+    ``run_changelog_compaction``: each micro-batch is reduced to ONE
+    row per (user, hour) key JVM-side (``groupBy().count()`` with
+    map-side partial aggregation), full-outer-joined against the
+    previous keys-sized admitted-counter table, and the merged
+    counters are written as a new parquet version the next batch
+    reads.  Admission COUNTS depend only on sizes, so the whole batch
+    step is one aggregate + one keys-sized join, ZERO per-key Python
+    dispatch.  Semantically identical to ``rate_limit_stream``; same
+    oracle, the X131 batch row_number SQL.
+
+    At pipeline cardinality the counter table is a bucketed table or
+    Delta/Iceberg MERGE target co-located on the key; dormant windows
+    age out of it with a watermark filter instead of a state-store
+    timeout.  Returns the per-window admission totals
+    ``(window_start, n_events, n_admitted, n_dropped)``."""
+    paths = _run_versioned(
+        events_stream, state_dir,
+        lambda versions: make_rate_limit_merge_batch(
+            state_dir, limit, versions))
+    # Each version row carries THAT batch's (n_batch, n_admitted_batch)
+    # partials (0 for keys the batch didn't touch), so summing the
+    # partials across versions reproduces the per-window totals.
+    emissions = events_stream.sparkSession.read.parquet(*paths)
+    return admission_totals(emissions).filter(F.col("n_events") > 0)

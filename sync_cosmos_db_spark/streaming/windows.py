@@ -296,9 +296,11 @@ def write_event_time_slices(df: DataFrame, out_dir: str,
             if _os.path.isdir(part_dir):
                 _shutil.rmtree(part_dir)
             continue
-        assert len(files) == 1, (
-            f"write_event_time_slices: slice {i} produced {len(files)} "
-            f"files, expected 1 (repartition by slice guarantees one)")
+        if len(files) != 1:
+            raise RuntimeError(
+                f"write_event_time_slices: slice {i} produced "
+                f"{len(files)} files, expected 1 (repartition by slice "
+                f"guarantees one)")
         dst = _os.path.join(out_dir, f"slice_{i}.parquet")
         _os.rename(files[0], dst)
         _shutil.rmtree(part_dir)
@@ -318,6 +320,19 @@ def run_stream_to_memory(spark: SparkSession, streaming_df: DataFrame,
          .start())
     q.awaitTermination()
     return spark.table(table_name)
+
+
+def run_foreach_batch(stream: DataFrame, process,
+                      checkpoint_dir: str) -> None:
+    """Run ``process(batch_df, batch_id)`` over every micro-batch the
+    source holds now (availableNow trigger) and block until done.  The
+    checkpoint records the input each committed batch consumed, so a
+    rerun with the same ``checkpoint_dir`` processes only new input."""
+    q = (stream.writeStream.foreachBatch(process)
+         .option("checkpointLocation", checkpoint_dir)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
 
 
 def interval_join_stream(left: DataFrame, right: DataFrame,

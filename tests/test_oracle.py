@@ -194,3 +194,27 @@ def test_readme_counts_match_registry():
     assert m, "README registry line missing"
     assert int(m.group(1)) == len(entrymod.queries())
     assert int(m.group(2)) == len(entrymod.oracle_sql())
+
+
+def test_stateful_twins_share_one_oracle():
+    """Each stateful operator's streaming twins check against their
+    batch original's oracle OBJECT, not a copy that could fork: the four
+    rate-limit queries share X131's SQL, and X53 shares its SQL with its
+    three X156 twins.  ``state_asof_orders_seq2`` replays only a prefix
+    of the same log, so it has its own oracle."""
+    from sync_cosmos_db_spark.queries import ORACLE_SQL
+
+    entrymod.oracle_sql()  # populate the registry
+    groups = {
+        "rate_limit_hourly": ["stream_rate_limit_hourly",
+                              "stream_rate_limit_hourly_tws",
+                              "stream_rate_limit_hourly_batchmerge"],
+        "cdc_apply_orders": ["stream_cdc_apply_orders",
+                             "stream_cdc_apply_orders_tws",
+                             "stream_cdc_apply_orders_batchmerge"],
+    }
+    for original, twins in groups.items():
+        for twin in twins:
+            assert ORACLE_SQL[twin] is ORACLE_SQL[original], twin
+    assert (ORACLE_SQL["state_asof_orders_seq2"]
+            is not ORACLE_SQL["cdc_apply_orders"])
